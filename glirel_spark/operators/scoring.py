@@ -1,6 +1,6 @@
 """Pair × label scoring — relational plane.
 
-Two scorers share the decode pipeline (threshold/top-k/constraints):
+Two scorers share the decode semantics (threshold/top-k/constraints):
 
 - ``lexical_score``: a deterministic, *SQL-expressible* scorer (integer
   arithmetic + one exactly-rounded IEEE division). It is the
@@ -10,8 +10,10 @@ Two scorers share the decode pipeline (threshold/top-k/constraints):
   architecture (label-prompt × span-pair reps, dot scorer — reference
   T1-T13) as a vectorized mapInPandas stage.
 
-Both emit the same (pair, label, score, prob) shape; decode does not
-care which produced it. Coref label semantics: prob 1.0 iff the two
+The lexical scorer emits (pair, label, score, prob) rows; the neural one
+emits one row per pair with a label-aligned ``probs`` vector and decodes
+it per row (model/udf.py), sharing ``lexical_constraint_ok`` for P9.
+Coref label semantics: prob 1.0 iff the two
 mention texts match (the SELF coreference convention of
 glirel/modules/utils.py:120-127 reduced to a deterministic rule).
 """
@@ -147,7 +149,15 @@ def lexical_topk1_triples(
         labels = config.RELATION_LABELS
     labs = sorted(labels)
     if not labs:
-        raise ValueError("lexical_topk1_triples needs a non-empty label set")
+        # no label can score: the same columns, no rows
+        out = rel_pairs.filter(F.lit(False)).select(
+            "doc_id", "h_start", "h_end", "t_start", "t_end",
+            "h_type", "t_type", "h_text", "t_text",
+            F.lit(None).cast("string").alias("label"),
+            F.lit(None).cast("int").alias("raw"),
+            F.lit(None).cast("double").alias("prob"),
+        )
+        return decode_ops.format_output(out) if formatted else out
     # The shared label-independent base term is materialized ONCE per
     # row (barrier): without it each of the |labels| raw expressions
     # inlines the 15-node base at every reference (greatest + the
@@ -185,17 +195,19 @@ def lexical_constraint_ok(
 ) -> "F.Column":
     """P9 constraint predicate as a label when-chain of ``isin`` tests —
     same truth table as the NULL-semantics array_contains form over the
-    broadcast label dimension (types are non-null by construction)."""
+    broadcast label dimension (types are non-null by construction): a
+    missing list is unconstrained, an empty list allows nothing, and a
+    label outside the dict is unconstrained (the left join's NULLs)."""
     ok = None
     for lab in sorted(labels):
         spec = labels.get(lab) or {}
         ah, at = spec.get("allowed_head"), spec.get("allowed_tail")
-        head_ok = F.col("h_type").isin(*ah) if ah else F.lit(True)
-        tail_ok = F.col("t_type").isin(*at) if at else F.lit(True)
+        head_ok = F.col("h_type").isin(*ah) if ah is not None else F.lit(True)
+        tail_ok = F.col("t_type").isin(*at) if at is not None else F.lit(True)
         cond = head_ok & tail_ok
         ok = (
             F.when(label_col == lab, cond)
             if ok is None
             else ok.when(label_col == lab, cond)
         )
-    return ok if ok is not None else F.lit(True)
+    return ok.otherwise(F.lit(True)) if ok is not None else F.lit(True)

@@ -45,16 +45,14 @@ def extract_triples(
     spark = docs_tokens.sparkSession
     label_dict = labels if labels is not None else config.RELATION_LABELS
     ldf = labels_df_from_dict(spark, label_dict)
-    # one cached gazetteer/hygiene pass feeds the pair subtree AND the
-    # decode enrichment (plan-keyed cache, shared with pipeline.docs_ments
-    # when called on the same docs_tokens plan)
-    dm = fused.with_mentions(docs_tokens).cache()
+    # no per-call cache: a long-lived session would keep one cached
+    # relation per request (the neural scorer and the k=1 lexical decode
+    # read the mention arrays once)
+    dm = fused.with_mentions(docs_tokens)
     if scorer == "neural":
         from glirel_spark.model import udf
 
-        return udf.neural_triples(
-            docs_tokens, fused.mentions_from(dm), threshold, top_k
-        )
+        return udf.neural_triples_from(dm, label_dict, threshold, top_k)
     rel = fused.pairs_from(dm).filter("is_rel")
     if top_k == 1:
         # fused per-row label argmax (round-6): works for ANY label dict

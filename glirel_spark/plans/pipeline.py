@@ -113,8 +113,7 @@ def triples(
     # Measured head-to-head at 320k docs (BENCH/BASELINE.md): payload
     # 162.3s/42.5s at 1/4 executors (0.956 efficiency) vs slim
     # 167.1s/47.8s (0.874) — faster at both levels AND scales better.
-    # Slim mode remains for scorers that emit key-only relations (the
-    # neural mapInPandas output, model/udf.neural_triples).
+    # Slim mode remains for api.extract_triples at top_k > 1.
     return decode_ops.decode(scored(spark, sf_dir), threshold, top_k)
 
 
@@ -161,7 +160,7 @@ def cluster_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _eval_preds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """triples back in inclusive-index space for gold matching."""
-    return triples(spark, sf_dir).select(
+    return triples(spark, sf_dir, top_k=config.TOP_K).select(
         "doc_id",
         F.col("head_start").alias("h_start"),
         (F.col("head_end") - 1).alias("h_end"),
@@ -177,9 +176,14 @@ def eval_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-6: decode + J5 filter + TP test are row-local on the pair
     # relation for the lexical scorer at k=1 (evaluate.py docstring);
     # bit-identical to the scored-relation chain, same unchanged oracle.
-    return evaluate.eval_counts_lexical(
-        pair_ops.relation_pairs(pairs(spark, sf_dir))
-    )
+    if config.TOP_K == 1:
+        return evaluate.eval_counts_lexical(
+            pair_ops.relation_pairs(pairs(spark, sf_dir))
+        )
+    s = scored(spark, sf_dir)
+    gold = evaluate.gold_triples(s)
+    preds = evaluate.annotated_pairs_filter(_eval_preds(spark, sf_dir), gold)
+    return evaluate.per_label_counts(preds, gold)
 
 
 def eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -196,9 +200,14 @@ def threshold_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are all row-local on the pair relation — no scored cache, no
     # |labels|x expansion, no best⋈gold join (evaluate.py docstring;
     # bit-identical output, same unchanged oracle). The scored-relation
-    # form (evaluate.threshold_search) remains for external scorers.
-    return evaluate.threshold_search_lexical(
-        pair_ops.relation_pairs(pairs(spark, sf_dir))
+    # form (evaluate.threshold_search) serves top_k > 1.
+    if config.TOP_K == 1:
+        return evaluate.threshold_search_lexical(
+            pair_ops.relation_pairs(pairs(spark, sf_dir))
+        )
+    s = scored(spark, sf_dir)
+    return evaluate.threshold_search(
+        s, evaluate.gold_triples(s), top_k=config.TOP_K
     )
 
 
@@ -304,11 +313,15 @@ def pred_type_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-6: feed the fused k=1 decoded relation directly (same rows
     # as decode-over-scored, tests/test_fused_decode.py) — no pairs x
     # labels expansion
-    return graph_ops.pred_type_signature(
-        decoded=scoring_ops.lexical_topk1_triples(
+    if config.TOP_K == 1:
+        decoded = scoring_ops.lexical_topk1_triples(
             pair_ops.relation_pairs(pairs(spark, sf_dir)), formatted=False
         )
-    )
+    else:
+        decoded = decode_ops.constraint_filter(decode_ops.top_k_per_pair(
+            decode_ops.threshold_filter(scored(spark, sf_dir)), config.TOP_K
+        ))
+    return graph_ops.pred_type_signature(decoded=decoded)
 
 
 def two_hop_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -360,11 +373,10 @@ def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def triples_neural(spark: SparkSession, sf_dir: str) -> DataFrame:
     from glirel_spark.model import udf
 
-    # fused mentions are row-identical to extract_mentions (tested) and
-    # come from the shared docs_ments cache
-    return udf.neural_triples(
-        docs_tokens(spark, sf_dir), mentions(spark, sf_dir)
-    )
+    # the scorer reads the per-doc mention arrays of the shared
+    # docs_ments cache directly: no re-pack, and no join or exchange
+    # after it (model/udf.py)
+    return udf.neural_triples_from(docs_ments(spark, sf_dir))
 
 
 # --- reference eval-protocol replay (WikiZSL/FewRel-shaped fixture) ----------

@@ -126,3 +126,58 @@ def test_threshold_search_lexical_dup_grid_and_raw_min(spark, rel):
     fused = evaluate.threshold_search_lexical(rel, grid=grid, raw_min=80)
     assert _rows(fused) == _rows(general)
     scored.unpersist()
+
+
+def test_lexical_topk1_empty_constraint_list_allows_nothing(spark, rel):
+    """allowed_head=[] / allowed_tail=[] mean "no type allowed" in the
+    relational constraint_filter; the fused when-chain must agree."""
+    from glirel_spark.plans.api import labels_df_from_dict
+
+    labels = {
+        "feeds": {"allowed_head": []},
+        "used by": {"allowed_tail": []},
+        "runs on": {},
+    }
+    general = decode_ops.decode(
+        scoring.score_pairs_lexical(rel, labels_df_from_dict(spark, labels)), 0.0, 1
+    )
+    fused = scoring.lexical_topk1_triples(rel, labels, threshold=0.0)
+    assert _rows(fused) == _rows(general)
+    assert {r.label for r in fused.collect()} == {"runs on"}
+
+
+def test_lexical_topk1_empty_label_dict_is_empty_typed(spark, rel):
+    for formatted in (True, False):
+        ref = scoring.lexical_topk1_triples(rel, formatted=formatted)
+        out = scoring.lexical_topk1_triples(rel, {}, formatted=formatted)
+        assert out.schema.simpleString() == ref.schema.simpleString()
+        assert out.count() == 0
+
+
+def test_top_k_above_one_routes_to_relational_forms(spark, monkeypatch):
+    """With config.TOP_K != 1 the k=1 fused forms would silently keep one
+    label per pair; eval_counts, threshold_search and pred_type_signature
+    must then equal their scored-relation forms at that k."""
+    from glirel_spark.operators import graph as graph_ops
+    from glirel_spark.plans import pipeline
+
+    monkeypatch.setattr(config, "TOP_K", 2)
+    s = pipeline.scored(spark, SF)
+    gold = evaluate.gold_triples(s)
+    preds = decode_ops.decode(s, config.THRESHOLD, 2).select(
+        "doc_id",
+        F.col("head_start").alias("h_start"), (F.col("head_end") - 1).alias("h_end"),
+        F.col("tail_start").alias("t_start"), (F.col("tail_end") - 1).alias("t_end"),
+        "label",
+    )
+    counts = evaluate.per_label_counts(evaluate.annotated_pairs_filter(preds, gold), gold)
+    assert _rows(pipeline.eval_counts(spark, SF)) == _rows(counts)
+    # the fixture is sensitive: k=2 keeps second labels k=1 drops
+    k1 = evaluate.eval_counts_lexical(pair_ops.relation_pairs(pipeline.pairs(spark, SF)))
+    assert _rows(counts) != _rows(k1)
+    search = evaluate.threshold_search(s, gold, top_k=2)
+    assert _rows(pipeline.threshold_search(spark, SF)) == _rows(search)
+    sig = graph_ops.pred_type_signature(decoded=decode_ops.constraint_filter(
+        decode_ops.top_k_per_pair(decode_ops.threshold_filter(s), 2)
+    ))
+    assert _rows(pipeline.pred_type_signature(spark, SF)) == _rows(sig)

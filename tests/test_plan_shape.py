@@ -250,3 +250,18 @@ def test_media_evidence_adds_only_a_dimension_join(spark):
     plan = _plan(pipeline.triples_media_evidence(spark, SF))
     assert plan.count("Exchange hashpartitioning") <= 1, plan
     assert "Window" not in plan
+
+
+def test_triples_neural_plan_has_no_join_aggregate_or_hash_shuffle(spark):
+    """The neural scorer emits one row per entity pair and decode is a
+    narrow projection over it: nothing re-joins mentions or labels and
+    nothing re-aggregates per pair."""
+    from glirel_spark.plans import pipeline
+
+    df = pipeline.triples_neural(spark, SF)
+    df.collect()
+    plan = _plan(df)
+    assert "MapInPandas" in plan
+    assert "Join" not in plan, plan
+    assert "Aggregate" not in plan, plan  # Hash, ObjectHash or Sort
+    assert "Exchange hashpartitioning" not in plan, plan

@@ -78,3 +78,27 @@ def test_curriculum_sort(spark):
     out = curriculum_sort(docs).select(F.size("relations").alias("n")).collect()
     ns = [r.n for r in out]
     assert ns == sorted(ns)
+
+
+def test_extract_triples_leaves_no_cached_relation(spark):
+    """A long-lived session serving requests must not accumulate one
+    cached relation per call."""
+    storage = spark.sparkContext._jsc.sc()
+    before = len(storage.getRDDStorageInfo())
+    for i, scorer in enumerate(("lexical", "neural", "lexical")):
+        docs = spark.createDataFrame(
+            [(f"d{i}", "spark query table scan window customer".split(" "))],
+            "doc_id string, tokens array<string>",
+        )
+        assert extract_triples(docs, scorer=scorer).collect()
+    assert len(storage.getRDDStorageInfo()) <= before
+
+
+def test_extract_triples_neural_scores_the_given_labels(spark):
+    docs = spark.createDataFrame(
+        [("d0", "spark query table scan window customer".split(" "))],
+        "doc_id string, tokens array<string>",
+    )
+    labels = {"feeds": {}, "made of": {"allowed_tail": ["OBJECT"]}}
+    rows = extract_triples(docs, labels, threshold=0.0, scorer="neural").collect()
+    assert rows and {r.label for r in rows} <= set(labels)
